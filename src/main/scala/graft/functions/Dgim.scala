@@ -67,6 +67,30 @@ object Dgim {
     }
   }
 
+  /** True when `v` is a 1-bit: exactly the strings for which
+    * `v.trim.toIntOption.contains(1)` holds (the reference's lenient
+    * `Integer.parseInt(value.trim()) == 1`), without allocating. After
+    * trimming chars <= ' ', that is an optional `+`, then one or more
+    * decimal digits (any Unicode `Character.digit`) that are all zeros
+    * except a final one. A `-` sign can never give +1, and digits that
+    * could overflow an Int are not all zeros, so neither needs a case.
+    */
+  def isOneBit(v: String): Boolean = {
+    if (v == null) return false
+    var lo = 0
+    var hi = v.length
+    while (lo < hi && v.charAt(lo) <= ' ') lo += 1
+    while (hi > lo && v.charAt(hi - 1) <= ' ') hi -= 1
+    if (lo < hi && v.charAt(lo) == '+') lo += 1
+    if (lo >= hi || Character.digit(v.charAt(hi - 1), 10) != 1) return false
+    var i = lo
+    while (i < hi - 1) {
+      if (Character.digit(v.charAt(i), 10) != 0) return false
+      i += 1
+    }
+    true
+  }
+
   def emptyState(windowSeconds: Long): State =
     State(windowSeconds, 0L, Array.empty, Array.empty)
 
@@ -197,8 +221,7 @@ class DgimBitAggregator(windowSeconds: Long, roundUp: Boolean = true)
     extends Aggregator[BitEvent, Dgim.State, Long] {
   override def zero: Dgim.State = Dgim.emptyState(windowSeconds)
   override def reduce(b: Dgim.State, e: BitEvent): Dgim.State = {
-    val isOne = e.value != null && e.value.trim.toIntOption.contains(1)
-    if (!isOne) b else Dgim.added(b, e.tsSec)
+    if (!Dgim.isOneBit(e.value)) b else Dgim.added(b, e.tsSec)
   }
   override def merge(a: Dgim.State, b: Dgim.State): Dgim.State = Dgim.merge(a, b)
   override def finish(r: Dgim.State): Long = r.estimate(roundUp)

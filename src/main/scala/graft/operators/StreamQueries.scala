@@ -148,6 +148,13 @@ object StreamQueries {
     * driver's per-row machinery costs stay comparable; at the 100×
     * fixture the largest source (157 MB events) sizes to 19, under
     * both caps, so no measured number moves.
+    *
+    * Local mode only: the heap cap reads `Runtime.maxMemory()`, the
+    * driver JVM's heap, which is where the state stores live when the
+    * master is `local[*]` (the harness's only deployment). On a cluster
+    * the state lives in executor heaps, and this guard would size
+    * against the wrong JVM; derive it from `spark.executor.memory`
+    * there instead.
     */
   private def runToTableSized(spark0: SparkSession, mode: String,
       inputBytes: Long)(

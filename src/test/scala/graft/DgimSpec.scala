@@ -1,5 +1,7 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Dgim
@@ -198,5 +200,28 @@ class DgimSpec extends AnyFunSuite {
       assert(math.abs(est - exact) <= exact / 2 + 10,
         s"merged est=$est exact=$exact n=$n")
     }
+  }
+
+  test("isOneBit accepts exactly what trim.toIntOption.contains(1) accepts") {
+    for (v <- Seq("1", " 1 ", "+1", "001", "\t1\n", "\u0661", "\uff11", "0\u06601"))
+      assert(Dgim.isOneBit(v), v)
+    for (v <- Seq(null, "", " ", "+", "1.0", "-1", "+-1", "++1", "10", "0",
+        "1 1", "2147483649", "4294967297", "\u00a01"))
+      assert(!Dgim.isOneBit(v), String.valueOf(v))
+    // alphabet: signs, ASCII and Unicode digits, blanks and controls,
+    // non-breaking space (not trimmed), letters and a surrogate half
+    val char = Gen.oneOf('0', '0', '1', '1', '2', '9', '+', '-', ' ', '\t',
+      '\u0001', '.', 'a', '\u00a0', '\u0660', '\u0661', '\uff10', '\uff11', '\ud835')
+    val str = Gen.frequency(
+      6 -> Gen.listOf(char).map(_.mkString),
+      1 -> Gen.choose(Long.MinValue, Long.MaxValue).map(_.toString),
+      1 -> Gen.choose(0, 40).map(n => "0" * n + "1"),
+      1 -> Gen.choose(0, 12).map(n => " +" + "0" * n + "1" + "0" * (n % 3) + " "))
+    val prop = Prop.forAll(str) { v =>
+      Dgim.isOneBit(v) == v.trim.toIntOption.contains(1)
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(20000).withInitialSeed(Seed(7L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 }

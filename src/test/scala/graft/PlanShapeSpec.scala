@@ -674,4 +674,36 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!physical(df).exists(
       _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]))
   }
+
+  test("TrafficSource.parse decodes once: one codegen'd operator evaluates the " +
+      "native decode; from_json only on its decline branch") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan,
+      WholeStageCodegenExec}
+    import graft.sources.{TrafficDecode, TrafficSource}
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_msgs").toString
+    import spark.implicits._
+    Seq("""{"value":"1","timestamp":"2024-01-01T00:00:01.000000"}""")
+      .toDF("raw").write.mode("overwrite").text(dir)
+    val df = TrafficSource.parse(spark.read.text(dir).select($"value".as("raw")))
+    assert(df.count() === 1L)
+    val nodes = physical(df)
+    val decoding = nodes.filter(_.expressions.exists(_.exists(_.isInstanceOf[TrafficDecode])))
+    assert(decoding.map(_.nodeName) === Seq("Generate"), df.queryExecution.executedPlan)
+    // JSON is parsed only by the decline branch, which is not a child
+    // expression: no operator evaluates from_json on every row
+    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))))
+    assert(decoding.head.expressions.flatMap(_.collect { case d: TrafficDecode => d })
+      .forall(_.json.exists(_.isInstanceOf[JsonToStructs])))
+    // codegen'd: inside a whole-stage-codegen stage, reached without
+    // crossing an InputAdapter (below which operators run interpreted)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case o => o +: o.children.flatMap(stage)
+    }
+    assert(nodes.exists {
+      case w: WholeStageCodegenExec => stage(w.child).exists(_.isInstanceOf[GenerateExec])
+      case _ => false
+    }, df.queryExecution.executedPlan)
+  }
 }

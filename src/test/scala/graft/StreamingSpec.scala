@@ -45,11 +45,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       """not json at all""",
       """{"value": "1", "timestamp": "yesterday"}""",
       """{"value": null, "timestamp": "2024-01-01T00:00:03.000000"}""",
-      """{"timestamp": "2024-01-01T00:00:04.000000"}""")
+      """{"timestamp": "2024-01-01T00:00:04.000000"}""",
+      // the compact form the benchmark generator emits, and its two
+      // malformed shapes: truncated mid-key, and 'T' replaced by '/'
+      """{"value":"1","timestamp":"2024-01-01T00:00:05.000000"}""",
+      """{"value":"0","timestamp":"2024-01-01T00:00:06.999999"}""",
+      """{"value":"1","timest""",
+      """{"value":"0","timestamp":"2024-01-01/00:00:07.000000"}""")
     val parsed = TrafficSource.parse(msgs.toDF("raw")).collect()
-    assert(parsed.length === 2)
+    assert(msgs.length - parsed.length === 6)
     assert(parsed.map(_.getAs[Long]("ts_sec")).sorted.toSeq ===
-      Seq(1704067201L, 1704067202L))
+      Seq(1704067201L, 1704067202L, 1704067205L, 1704067206L))
   }
 
   test("streaming tumbleDgim over a file-backed traffic stream matches exact count within DGIM bound") {
