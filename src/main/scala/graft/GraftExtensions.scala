@@ -40,6 +40,10 @@ object CollapseNormalize extends Rule[LogicalPlan] {
   *    normalize ([[graft.functions.NormalizeText]]); sessions that only
   *    call `GraftFunctions.register` get the UDF twin under the same
   *    name with identical semantics.
+  *  - `dgim_estimate`, `dgim_estimate_floor`, `dgim_sum_estimate` — the
+  *    native DGIM aggregate ([[graft.functions.DgimEstimate]]) from
+  *    [[GraftFunctions.dgimFunctions]], the same table
+  *    `GraftFunctions.register` installs.
   *
   * Also injected: [[graft.plans.DgimStrategy]] (the custom DGIM window
   * aggregation physical strategy) and [[CollapseNormalize]] (optimizer
@@ -61,6 +65,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.DgimStrategy)
     ext.injectOptimizerRule(_ => CollapseNormalize)
+    GraftFunctions.dgimFunctions.foreach(ext.injectFunction)
     ext.injectFunction((
       new FunctionIdentifier("float_dot"),
       new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),

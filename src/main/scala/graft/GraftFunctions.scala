@@ -1,14 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-import graft.functions.{DgimBitAggregator, Text}
+import graft.functions.{Dgim, DgimEstimate, Text}
 
-/** Session-scoped SQL function registration — the UDF/UDAF companions to
-  * [[GraftExtensions]] (which injects native expressions). Together they
-  * give pure-SQL users the reference engine's registered-function surface:
-  * the Flink job registers `DGIM_ESTIMATE` as a SQL aggregate
+/** Session-scoped SQL function registration — the text UDFs plus the
+  * native DGIM aggregate, on a session built without [[GraftExtensions]]
+  * (which injects the native expressions and the same [[dgimFunctions]]).
+  * Together they give pure-SQL users the reference engine's
+  * registered-function surface: the Flink job registers `DGIM_ESTIMATE`
+  * as a SQL aggregate
   * (/root/reference/src/main/java/com/bencejdanko/flink/StreamingJob.java:57-58);
   * graft registers the same name over the same (value, ts_seconds)
   * signature.
@@ -22,25 +28,43 @@ import graft.functions.{DgimBitAggregator, Text}
   */
 object GraftFunctions {
 
-  /** Window size of the registered `dgim_estimate`, in seconds. The
+  /** Window size of the registered DGIM functions, in seconds. The
     * reference fixes 60 s at registration time (its jobs use 60 s
     * windows); graft's batch queries use 1 h windows over the events
-    * table, so that is the registered default here. Register another name
-    * via [[registerDgim]] for other window sizes.
+    * table, so that is the registered default here.
     */
   val DefaultDgimWindowSeconds = 3600L
 
+  /** The SQL names of [[DgimEstimate]], one table for both install
+    * paths (this object's [[register]] and [[GraftExtensions]]):
+    *  - `dgim_estimate(value, ts_sec)`: the flagship's round-up;
+    *  - `dgim_estimate_floor(value, ts_sec)`: the PyFlink variant's floor
+    *    of the oldest bucket (job.py:37-46);
+    *  - `dgim_sum_estimate(amount, ts_sec)`: the sum (Datar et al. §5).
+    * A STRING value counts 1-bits, a BIGINT one sums amounts, so the
+    * names differ only in rounding and intent. Narrower integer
+    * arguments widen to BIGINT.
+    */
+  val dgimFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq("dgim_estimate" -> true, "dgim_estimate_floor" -> false,
+        "dgim_sum_estimate" -> true).map { case (name, roundUp) =>
+      (FunctionIdentifier(name), new ExpressionInfo(classOf[DgimEstimate].getName, name),
+        (args: Seq[Expression]) => {
+          require(args.length == 2, s"$name takes (value, ts_sec), got ${args.length} arguments")
+          val agg = DgimEstimate(widen(args.head), widen(args(1)),
+            DefaultDgimWindowSeconds, Dgim.SumBits, roundUp, 0, 0)
+          agg.setTagValue(FunctionRegistry.FUNC_ALIAS, name)
+          agg
+        })
+    }
+
+  private def widen(e: Expression): Expression = e.dataType match {
+    case ByteType | ShortType | IntegerType => Cast(e, LongType)
+    case _ => e
+  }
+
   def register(spark: SparkSession): Unit = {
-    registerDgim(spark, "dgim_estimate", DefaultDgimWindowSeconds)
-    // the PyFlink variant's semantics (floor of the oldest bucket,
-    // job.py:37-46) under its own name
-    registerDgim(spark, "dgim_estimate_floor", DefaultDgimWindowSeconds,
-      roundUp = false)
-    // the sum generalization (Datar et al. §5): dgim_sum_estimate(amount
-    // BIGINT, ts_sec BIGINT) -> BIGINT over the same 1 h window
-    spark.udf.register("dgim_sum_estimate",
-      udaf(new graft.functions.DgimSumAggregator(DefaultDgimWindowSeconds),
-        Encoders.product[graft.functions.SumEvent]))
+    dgimFunctions.foreach(ColumnBridge.registerFunction(spark, _))
     spark.udf.register("rolling_hash61", Text.rollingHashUdf)
     // the text-pipeline primitives for pure-SQL users (same single-pass
     // fast paths the operators use, spec-pinned to the Column semantics)
@@ -70,14 +94,4 @@ object GraftFunctions {
     x = (x | (x << 1)) & 0x55555555L
     x
   }
-
-  /** Register a DGIM estimate aggregate bound to `windowSeconds`:
-    * `name(value STRING, ts_sec BIGINT) -> BIGINT` — lenient accumulate
-    * (non-"1" values ignored), canonical bucket merge across partitions.
-    */
-  def registerDgim(spark: SparkSession, name: String, windowSeconds: Long,
-      roundUp: Boolean = true): Unit =
-    spark.udf.register(name,
-      udaf(new DgimBitAggregator(windowSeconds, roundUp),
-        Encoders.product[graft.functions.BitEvent]))
 }

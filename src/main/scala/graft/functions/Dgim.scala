@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 /** DGIM (Datar–Gionis–Indyk–Motwani, "Maintaining Stream Statistics over
   * Sliding Windows", SIAM J. Comput. 2002): approximate count of 1-bits in
   * the last W time units of a bit stream using O(log² W) space.
@@ -22,10 +19,21 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * Hot-path design: the per-row add runs entirely on primitive Long
   * arrays (System.arraycopy insert/compact, no boxing, no ArrayBuffer) —
-  * this is the inner loop of the streaming DGIM aggregation, executed
-  * once per 1-bit message.
+  * this is the inner loop of the DGIM aggregation ([[DgimEstimate]] and
+  * the window exec), executed once per 1-bit message.
+  *
+  * The windowed SUM of bounded non-negative integers (Datar et al. §5)
+  * is `bits` of these sketches, one per bit of the amount; the count is
+  * the sum at `bits = 1`.
   */
 object Dgim {
+
+  /** Bit width of the sum sketch's binary decomposition: covers the
+    * events table's cents domain at every SF (amounts saturate at
+    * `(1 << SumBits) - 1`). The one constant the window exec, its SQL
+    * replay and the SQL/streaming aggregate derive from.
+    */
+  val SumBits = 17
 
   /** Mergeable, Encoder-friendly DGIM state. `ts` and `size` are parallel
     * arrays, newest first.
@@ -121,8 +129,8 @@ object Dgim {
   }
 
   /** One 1-bit arriving at `tsSec`, applied to an immutable [[State]]:
-    * exactly two primitive array allocations, no boxing. This is the
-    * aggregator's per-row reduce path.
+    * exactly two primitive array allocations, no boxing. Folds to the
+    * same state as [[Builder.add]].
     */
   def added(s: State, tsSec: Long): State = {
     val n = s.ts.length
@@ -139,8 +147,9 @@ object Dgim {
       if (m == sz.length) sz else java.util.Arrays.copyOf(sz, m))
   }
 
-  /** Mutable builder used on per-group batch paths: reusable primitive
-    * arrays with capacity growth, O(#buckets) arraycopy per add.
+  /** Mutable builder: reusable primitive arrays with capacity growth,
+    * O(#buckets) arraycopy per add. The per-row path of [[DgimEstimate]]
+    * and of the window exec.
     */
   final class Builder(val windowSeconds: Long) {
     private var bts = new Array[Long](16)
@@ -203,117 +212,4 @@ object Dgim {
     builder.rebalanceAndExpire()
     builder.state
   }
-}
-
-/** Raw traffic message shape fed to [[DgimBitAggregator]]: the reference's
-  * accumulate(value, timestampSeconds) signature
-  * (DGIMAggregateFunction.java:56-78).
-  */
-case class BitEvent(value: String, tsSec: Long)
-
-/** DGIM over (value, ts) pairs: non-numeric values are skipped, only
-  * bit == 1 feeds the sketch — the reference's lenient accumulate.
-  * reduce() is the allocation-lean [[Dgim.added]] primitive-array path.
-  * `roundUp` selects the published estimate semantics (Java flagship
-  * ceil vs PyFlink floor of the oldest bucket).
-  */
-class DgimBitAggregator(windowSeconds: Long, roundUp: Boolean = true)
-    extends Aggregator[BitEvent, Dgim.State, Long] {
-  override def zero: Dgim.State = Dgim.emptyState(windowSeconds)
-  override def reduce(b: Dgim.State, e: BitEvent): Dgim.State = {
-    if (!Dgim.isOneBit(e.value)) b else Dgim.added(b, e.tsSec)
-  }
-  override def merge(a: Dgim.State, b: Dgim.State): Dgim.State = Dgim.merge(a, b)
-  override def finish(r: Dgim.State): Long = r.estimate(roundUp)
-  override def bufferEncoder: Encoder[Dgim.State] = Encoders.product[Dgim.State]
-  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-class DgimAggregator(windowSeconds: Long) extends Aggregator[Long, Dgim.State, Long] {
-  override def zero: Dgim.State = Dgim.emptyState(windowSeconds)
-  override def reduce(b: Dgim.State, tsSeconds: Long): Dgim.State =
-    Dgim.added(b, tsSeconds)
-  override def merge(a: Dgim.State, b: Dgim.State): Dgim.State = Dgim.merge(a, b)
-  override def finish(r: Dgim.State): Long = r.estimate
-  override def bufferEncoder: Encoder[Dgim.State] = Encoders.product[Dgim.State]
-  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-/** Mergeable state of the DGIM SUM sketch: one independent [[Dgim.State]]
-  * per bit position, newest-first inside each.
-  */
-case class DgimSumState(windowSeconds: Long, states: Seq[Dgim.State])
-
-/** One (amount, event-time) pair for the sum sketch. */
-case class SumEvent(amount: Long, tsSec: Long)
-
-/** DGIM extended from bit-counting to SUMS of bounded non-negative
-  * integers — the generalization published alongside the counting sketch
-  * (Datar–Gionis–Indyk–Motwani 2002, §5: "maintaining the sum of the
-  * last N elements" via binary decomposition): each arriving amount v
-  * feeds a 1-bit into an independent DGIM instance for every set bit of
-  * v, and the windowed-sum estimate is Σ_j 2^j · estimate_j. State is
-  * `bits × O(log² W)` — still polylogarithmic in the window.
-  *
-  * Error: each instance carries the counting sketch's ≤ 50% bound on
-  * its own bit count, so the weighted total satisfies
-  * |est − exact| ≤ 0.5 · exact (+ ≤ 1 per instance from round-up).
-  *
-  * Amounts clamp into [0, 2^bits): negative amounts are skipped
-  * (lenient, like the bit aggregator's non-"1" values), oversized
-  * amounts saturate at 2^bits − 1 — pick `bits` from the domain bound
-  * (17 covers the events table's cents at every SF).
-  *
-  * Ordering: like [[DgimBitAggregator]], the per-row reduce inserts at
-  * the newest-first head and expires at the arriving timestamp — it
-  * assumes non-decreasing timestamps WITHIN a partition (cross-partition
-  * disorder is repaired by the sort-based canonical [[Dgim.merge]]).
-  * Intra-partition out-of-order rows break the newest-first invariant
-  * and can void the §5 bound; feed it partition-sorted event time (the
-  * batch queries sort per group, streaming micro-batches arrive in
-  * watermark order) or pre-sort unordered sources.
-  */
-class DgimSumAggregator(windowSeconds: Long, bits: Int = 17)
-    extends Aggregator[SumEvent, DgimSumState, Long] {
-  override def zero: DgimSumState =
-    DgimSumState(windowSeconds,
-      Vector.fill(bits)(Dgim.emptyState(windowSeconds)))
-  override def reduce(b: DgimSumState, e: SumEvent): DgimSumState = {
-    if (e.amount <= 0L) b
-    else {
-      val v = math.min(e.amount, (1L << bits) - 1)
-      // hot path: one 17-slot ref-array copy per row, mutated in place —
-      // Vector.updated per set bit was up to 17 persistent-vector copies
-      // per row (the round-2 count-sketch lesson applied to the sum form)
-      val out = b.states.toArray
-      var j = 0
-      while (j < bits) {
-        if (((v >> j) & 1L) == 1L)
-          out(j) = Dgim.added(out(j), e.tsSec)
-        j += 1
-      }
-      DgimSumState(b.windowSeconds,
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-    }
-  }
-  override def merge(a: DgimSumState, b: DgimSumState): DgimSumState =
-    DgimSumState(a.windowSeconds,
-      a.states.zip(b.states).map { case (x, y) => Dgim.merge(x, y) })
-  override def finish(r: DgimSumState): Long = {
-    // evaluate every instance at the GLOBAL latest: an instance whose bit
-    // recent values never set has a stale local clock, and its expired
-    // buckets must not count (measured: a 100-then-7 stream estimated 103
-    // instead of 7 before this)
-    var latest = 0L
-    r.states.foreach(s => latest = math.max(latest, s.latest))
-    var total = 0L
-    var j = 0
-    while (j < r.states.length) {
-      total += (1L << j) * r.states(j).estimateAt(latest, roundUp = true)
-      j += 1
-    }
-    total
-  }
-  override def bufferEncoder: Encoder[DgimSumState] = Encoders.product[DgimSumState]
-  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
 }

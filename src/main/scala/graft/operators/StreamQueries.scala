@@ -2379,9 +2379,9 @@ object StreamQueries {
 
   /** The SUM sketch on the unbounded stream: windowed `dgim_sum_estimate`
     * (the Datar et al. §5 generalization `q_dgim_sum` runs in batch) as a
-    * streaming aggregation — the typed DGIM-sum buffer is mergeable
-    * state, so partial aggregation and the state store compose exactly
-    * like the count sketch in `q_stream_dgim_tumble`. Answers
+    * streaming aggregation — the native [[graft.functions.DgimEstimate]]
+    * buffer is mergeable state, so partial aggregation and the state
+    * store compose exactly like the count in `q_stream_dgim_tumble`. Answers
     * "approximate revenue in the trailing hour" continuously, with
     * 17×O(log²W) state per window.
     *
@@ -2392,14 +2392,13 @@ object StreamQueries {
   def streamDgimSum(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark) { s =>
       import s.implicits._
-      val agg = udaf(new graft.functions.DgimSumAggregator(3600L, bits = DgimQueries.SumBits))
       eventsStream(s, dir)
         .filter($"event_type" === "click" && $"ts".isNotNull)
         .withWatermark("ts", "1 hour")
         .select($"ts", round($"value" * 100).cast("long").as("cents"),
           unix_timestamp($"ts").as("ts_sec"))
         .groupBy(window($"ts", "1 hour"))
-        .agg(agg($"cents", $"ts_sec").as("sum_estimate"))
+        .agg(graft.functions.DgimEstimate($"cents", $"ts_sec", 3600L).as("sum_estimate"))
         .select($"window.start".as("window_start"),
           $"window.end".as("window_end"), $"sum_estimate")
     }

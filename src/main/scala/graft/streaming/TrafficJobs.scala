@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.functions.{BitEvent, Dgim, DgimBitAggregator}
+import graft.functions.{Dgim, DgimEstimate}
 
 /** Structured Streaming equivalents of the reference's two Flink jobs.
   *
@@ -19,16 +19,13 @@ import graft.functions.{BitEvent, Dgim, DgimBitAggregator}
   *    (SlidingWindowStreamingJob.java:70-121)
   *
   * Scale: event-time windows + watermark bound the state store; DGIM
-  * state itself is O(log² W) per window via the mergeable aggregator —
-  * this is the constant-memory path for unbounded streams, exactly DGIM's
-  * reason to exist. Works under both `append` (production: finalized
-  * windows only, state evicted past the watermark) and `complete`
-  * (test harness) output modes.
+  * state itself is O(log² W) per window via the mergeable native
+  * [[DgimEstimate]] aggregate — this is the constant-memory path for
+  * unbounded streams, exactly DGIM's reason to exist. Works under both
+  * `append` (production: finalized windows only, state evicted past the
+  * watermark) and `complete` (test harness) output modes.
   */
 object TrafficJobs {
-
-  private def dgimAgg(windowSeconds: Long) =
-    udaf(new DgimBitAggregator(windowSeconds))
 
   /** Tumbling-window DGIM estimate; reference Job 1 (60 s tumble). */
   def tumbleDgim(parsed: DataFrame, size: String = "60 seconds",
@@ -36,7 +33,7 @@ object TrafficJobs {
     parsed
       .withWatermark("event_ts", watermark)
       .groupBy(window(col("event_ts"), size))
-      .agg(dgimAgg(windowSeconds)(col("value"), col("ts_sec")).as("count_estimate"))
+      .agg(DgimEstimate(col("value"), col("ts_sec"), windowSeconds).as("count_estimate"))
       .select(col("window.end").as("window_end"), col("count_estimate"))
 
   /** Processing-time twin of [[tumbleDgim]] — the reference's literal
@@ -55,7 +52,7 @@ object TrafficJobs {
     parsed
       .withColumn("proc_ts", current_timestamp())
       .groupBy(window(col("proc_ts"), size))
-      .agg(dgimAgg(windowSeconds)(col("value"), col("ts_sec")).as("count_estimate"))
+      .agg(DgimEstimate(col("value"), col("ts_sec"), windowSeconds).as("count_estimate"))
       .select(col("window.end").as("window_end"), col("count_estimate"))
 
   /** Hop-window DGIM estimate; reference Job 2 (60 s size / 10 s slide). */
@@ -65,7 +62,7 @@ object TrafficJobs {
     parsed
       .withWatermark("event_ts", watermark)
       .groupBy(window(col("event_ts"), size, slide))
-      .agg(dgimAgg(windowSeconds)(col("value"), col("ts_sec")).as("count_estimate"))
+      .agg(DgimEstimate(col("value"), col("ts_sec"), windowSeconds).as("count_estimate"))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("count_estimate"))
 
@@ -85,7 +82,7 @@ object TrafficJobs {
     * StreamingJob.java:60-83's `upsert-kafka` sink). An event-time
     * timeout finalizes and evicts the window once the watermark passes.
     *
-    * vs the `udaf` jobs above: same O(log² W) per-window state, but with
+    * vs the aggregate jobs above: same O(log² W) per-window state, but with
     * direct control of emission timing and state lifecycle — the shape
     * to use when the sink needs per-batch upserts rather than
     * append-on-finalize.

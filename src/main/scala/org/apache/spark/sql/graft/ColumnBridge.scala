@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge for graft's native Catalyst expressions.
@@ -21,6 +22,14 @@ object ColumnBridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** Register a native function on one live session — what
+    * `SparkSessionExtensions.injectFunction` does at session build.
+    */
+  def registerFunction(spark: SparkSession,
+      fn: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry.registerFunction(fn._1, fn._2, fn._3)
 
   /** Lift a custom LogicalPlan back into a DataFrame. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,

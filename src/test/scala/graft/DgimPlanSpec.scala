@@ -11,7 +11,8 @@ import graft.operators.DgimQueries
   * its output must equal the reference semantics computed independently
   * (collect → group per window → sort → Dgim.estimateSorted), and the
   * planned physical tree must contain the operator above a planner-inserted
-  * Exchange + Sort.
+  * Exchange + Sort. Also pins the native DgimEstimate aggregate to the
+  * typed reference aggregator, estimate for estimate.
   */
 class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -26,18 +27,27 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** The one DGIM window exec in `df`'s plan, and the plan's text. */
+  private def windowExec(df: org.apache.spark.sql.DataFrame) = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val execs = plan.collect { case e: graft.plans.DgimWindowAggExec => e }
+    assert(execs.length === 1, plan)
+    (execs.head, plan.toString)
+  }
+
   test("physical plan is DgimWindowAgg over planner-inserted Exchange + Sort") {
-    val plan = DgimQueries.dgimTumble(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("DgimWindowAgg"))
+    val (exec, plan) = windowExec(DgimQueries.dgimTumble(spark, sf))
+    assert(exec.bits === 1)
     assert(plan.contains("Exchange"))
     assert(plan.contains("Sort"))
   }
 
-  test("physical plan is DgimSumWindowAgg over planner-inserted Exchange + Sort") {
-    val plan = DgimQueries.dgimSumTumble(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("DgimSumWindowAgg"))
+  test("sum form plans the same DgimWindowAgg exec at 17 bits over Exchange + Sort") {
+    val (exec, plan) = windowExec(DgimQueries.dgimSumTumble(spark, sf))
+    assert(exec.bits === Dgim.SumBits)
     assert(plan.contains("Exchange"))
     assert(plan.contains("Sort"))
   }
@@ -134,10 +144,10 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // not land the row in the 1970 epoch window
     val child = Seq((3600L, 7200L, Some(3700L)), (3600L, 7200L, None))
       .toDF("ws", "we", "ts_sec")
-      .select($"ws", $"we", $"ts_sec".cast("long").as("ts_sec"))
+      .select($"ws", $"we", $"ts_sec".cast("long").as("ts_sec"), lit(1L).as("amount"))
     graft.plans.DgimStrategy.ensureRegistered(spark)
     val df = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
-      graft.plans.DgimWindowAggPlan(3600L,
+      graft.plans.DgimWindowAggPlan(3600L, 1,
         org.apache.spark.sql.graft.ColumnBridge.logicalPlan(child)))
     val e = intercept[Exception] { df.collect() }
     def chain(t: Throwable): Seq[String] =
@@ -189,5 +199,54 @@ class DgimPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"window ${r.get(0)}: est=$est exact=$exact")
       }
     }
+  }
+
+  test("native DgimEstimate equals the typed reference aggregator per window " +
+      "(count, floor, sum) at 1, 3 and 8 partitions") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.functions.DgimEstimate
+    val isOne = udf((v: String) => Dgim.isOneBit(v))
+    val vocab = Array("1", "1", "1", "0", " 1", "+01", "x", "", null)
+    val base = 1704067200L
+    var roundingDiffers = false
+    for (seed <- Seq(3L, 11L)) {
+      val rnd = new scala.util.Random(seed)
+      // 14 h of events in 10-minute windows -> 84 groups; amounts cover
+      // zero, negatives, nulls and values past the 17-bit cap
+      val rows = (0 until 6000).map { _ =>
+        val amount: Option[Long] = rnd.nextInt(20) match {
+          case 0 => None
+          case 1 => Some(-rnd.nextLong(100L))
+          case 2 => Some((1L << 17) + rnd.nextLong(1L << 20))
+          case _ => Some(rnd.nextLong(5000L))
+        }
+        (vocab(rnd.nextInt(vocab.length)), amount, base + rnd.nextLong(14 * 3600L))
+      }.sortBy(_._3)
+      val events = rows.toDF("value", "amount", "ts_sec")
+        .withColumn("ts", timestamp_seconds($"ts_sec"))
+      for (partitions <- Seq(1, 3, 8); w <- Seq(60L, 600L)) {
+        def ref(roundUp: Boolean, bits: Int, amount: org.apache.spark.sql.Column) =
+          udaf(new DgimSumAggregator(w, bits, roundUp)).apply(amount, $"ts_sec")
+        val bit = when(isOne($"value"), 1L).otherwise(0L)
+        val got = events.repartition(partitions)
+          .groupBy(window($"ts", "10 minutes"))
+          .agg(
+            ref(roundUp = true, 1, bit).as("ref_count"),
+            DgimEstimate($"value", $"ts_sec", w).as("count"),
+            ref(roundUp = false, 1, bit).as("ref_floor"),
+            DgimEstimate($"value", $"ts_sec", w, roundUp = false).as("floor"),
+            ref(roundUp = true, Dgim.SumBits, $"amount").as("ref_sum"),
+            DgimEstimate($"amount", $"ts_sec", w).as("sum"))
+          .collect()
+        assert(got.length === 84)
+        for (r <- got; f <- Seq("count", "floor", "sum"))
+          assert(r.getAs[Long](f) === r.getAs[Long]("ref_" + f),
+            s"$f differs in ${r.get(0)} (seed $seed, $partitions partitions, W=$w)")
+        assert(got.exists(_.getAs[Long]("sum") > 0L))
+        roundingDiffers ||= got.exists(r => r.getAs[Long]("count") != r.getAs[Long]("floor"))
+      }
+    }
+    assert(roundingDiffers, "no window separates the round-up and floor estimates")
   }
 }

@@ -4,6 +4,10 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.LongType
+
 import graft.functions.Dgim
 
 class DgimSpec extends AnyFunSuite {
@@ -135,14 +139,20 @@ class DgimSpec extends AnyFunSuite {
     assert(b.state.estimate === 1L)
   }
 
-  import graft.functions.{DgimSumAggregator, SumEvent}
+  // the native aggregate's sum form, driven directly over (amount, ts) rows
+  private def sumAgg(windowSeconds: Long, bits: Int) = graft.functions.DgimEstimate(
+    BoundReference(0, LongType, nullable = true), BoundReference(1, LongType, nullable = true),
+    windowSeconds, bits, roundUp = true, 0, 0)
 
-  private def sumFold(agg: DgimSumAggregator, events: Seq[(Long, Long)]): Long =
-    agg.finish(events.foldLeft(agg.zero) { case (s, (v, t)) =>
-      agg.reduce(s, SumEvent(v, t)) })
+  private def fold(agg: graft.functions.DgimEstimate, events: Seq[(Long, Long)]) =
+    events.foldLeft(agg.createAggregationBuffer()) { case (b, (v, t)) =>
+      agg.update(b, InternalRow(v, t)) }
+
+  private def sumFold(agg: graft.functions.DgimEstimate, events: Seq[(Long, Long)]): Long =
+    agg.eval(fold(agg, events)).asInstanceOf[Long]
 
   test("sum sketch: small streams are exact (hand-computed binary decomposition)") {
-    val agg = new DgimSumAggregator(3600, bits = 4)
+    val agg = sumAgg(3600, bits = 4)
     // 3 = 0b11 feeds bits {0,1}; 5 = 0b101 feeds bits {0,2}; every
     // instance holds <= 2 size-1 buckets (no merges) -> estimate exact
     assert(sumFold(agg, Seq(3L -> 10L, 5L -> 20L)) === 8L)
@@ -151,13 +161,13 @@ class DgimSpec extends AnyFunSuite {
   }
 
   test("sum sketch: expiry drops amounts older than the window") {
-    val agg = new DgimSumAggregator(3600, bits = 8)
+    val agg = sumAgg(3600, bits = 8)
     // 100 at t=0 expires once 5000 arrives (W=3600); only 7 remains
     assert(sumFold(agg, Seq(100L -> 0L, 7L -> 5000L)) === 7L)
   }
 
   test("sum sketch: lenient inputs — negatives skipped, oversize saturates") {
-    val agg = new DgimSumAggregator(3600, bits = 4)
+    val agg = sumAgg(3600, bits = 4)
     assert(sumFold(agg, Seq(-5L -> 10L)) === 0L)
     // 1000 >= 2^4 saturates at 15 (single value per bit -> exact)
     assert(sumFold(agg, Seq(1000L -> 10L)) === 15L)
@@ -165,7 +175,7 @@ class DgimSpec extends AnyFunSuite {
 
   test("sum sketch: 50% published bound on seeded random streams (§5)") {
     val rnd = new scala.util.Random(42)
-    val agg = new DgimSumAggregator(600, bits = 10)
+    val agg = sumAgg(600, bits = 10)
     for (_ <- 0 until 100) {
       val n = rnd.nextInt(1000)
       val ev = Array.fill(n)((rnd.nextLong(1024L), rnd.nextLong(7200L)))
@@ -184,17 +194,18 @@ class DgimSpec extends AnyFunSuite {
 
   test("sum sketch: split/merge keeps the bound (mergeable partial aggregation)") {
     val rnd = new scala.util.Random(7)
-    val agg = new DgimSumAggregator(600, bits = 10)
+    val agg = sumAgg(600, bits = 10)
     for (_ <- 0 until 50) {
       val n = 2 + rnd.nextInt(800)
       val ev = Array.fill(n)((rnd.nextLong(1024L), rnd.nextLong(7200L))).sortBy(_._2)
       // alternate-partition split, each side folded in its own order —
       // the shape of a two-partition map-side partial aggregation
       val (a, b) = ev.zipWithIndex.partition(_._2 % 2 == 0)
-      def fold(part: Array[((Long, Long), Int)]) =
-        part.map(_._1).foldLeft(agg.zero) { case (s, (v, t)) =>
-          agg.reduce(s, SumEvent(v, t)) }
-      val est = agg.finish(agg.merge(fold(a), fold(b)))
+      def side(part: Array[((Long, Long), Int)]) = fold(agg, part.map(_._1).toSeq)
+      // one side crosses the buffer's byte form, as a shuffled or
+      // state-stored partial does
+      val est = agg.eval(agg.merge(agg.deserialize(agg.serialize(side(a))), side(b)))
+        .asInstanceOf[Long]
       val latest = ev.map(_._2).max
       val exact = ev.filter(e => latest - e._2 < 600L).map(_._1).sum
       assert(math.abs(est - exact) <= exact / 2 + 10,

@@ -47,30 +47,66 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.toLowerCase.contains("array<float>"))
   }
 
-  test("dgim_estimate is callable from SQL (the reference's registered-aggregate surface)") {
-    import spark.implicits._
-    GraftFunctions.register(spark)
+  private def dgimEstimateCases(s: SparkSession): Unit = {
+    import s.implicits._
     // 1-bits at seconds 0..99 within one window -> estimate near 100
-    (0L until 100L).map(s => ("1", s)).toDF("value", "ts_sec")
+    (0L until 100L).map(t => ("1", t)).toDF("value", "ts_sec")
       .createOrReplaceTempView("traffic_bits")
-    val est = spark.sql(
+    val est = s.sql(
       "SELECT dgim_estimate(value, ts_sec) AS e FROM traffic_bits").collect()(0).getLong(0)
     assert(est >= 50 && est <= 150, s"estimate $est out of DGIM bound for 100 ones")
     // lenient accumulate: junk values ignored
-    val est2 = spark.sql(
+    val est2 = s.sql(
       """SELECT dgim_estimate(v, t) AS e FROM VALUES ('1', 10L), ('0', 11L),
         |  ('x', 12L), (NULL, 13L), ('1', 14L) AS t(v, t)""".stripMargin)
       .collect()(0).getLong(0)
     assert(est2 === 2L)
   }
 
-  test("dgim_estimate_floor exposes the PyFlink round-down semantics in SQL") {
-    GraftFunctions.register(spark)
+  private def dgimFloorCases(s: SparkSession): Unit = {
     // two 1-bits -> buckets [(20,1),(10,1)]; oldest size 1 is the parity
     // where the two published semantics differ: ceil gives 2, floor 1
-    val sql = "SELECT %s(v, t) AS e FROM VALUES ('1', 10L), ('1', 20L) AS x(v, t)"
-    assert(spark.sql(sql.format("dgim_estimate")).collect()(0).getLong(0) === 2L)
-    assert(spark.sql(sql.format("dgim_estimate_floor")).collect()(0).getLong(0) === 1L)
+    for ((a, b) <- Seq(("10L", "20L"), ("10", "20"))) { // INT widens to BIGINT
+      val sql = s"SELECT %s(v, t) AS e FROM VALUES ('1', $a), ('1', $b) AS x(v, t)"
+      assert(s.sql(sql.format("dgim_estimate")).collect()(0).getLong(0) === 2L)
+      assert(s.sql(sql.format("dgim_estimate_floor")).collect()(0).getLong(0) === 1L)
+    }
+  }
+
+  test("dgim_estimate is callable from SQL (the reference's registered-aggregate surface)") {
+    GraftFunctions.register(spark)
+    dgimEstimateCases(spark)
+  }
+
+  test("dgim_estimate_floor exposes the PyFlink round-down semantics in SQL") {
+    GraftFunctions.register(spark)
+    dgimFloorCases(spark)
+  }
+
+  test("DGIM functions resolve to the native aggregate in an extensions-only session") {
+    // fresh session state, no GraftFunctions.register: the names come
+    // from the table GraftExtensions injects
+    val s = spark.newSession()
+    dgimEstimateCases(s)
+    dgimFloorCases(s)
+    val plan = s.sql("SELECT dgim_sum_estimate(4L, 1L)").queryExecution.analyzed
+    assert(plan.expressions.exists(_.exists(_.isInstanceOf[graft.functions.DgimEstimate])), plan)
+  }
+
+  test("a null timestamp drops the row instead of adding a bit at epoch 0") {
+    GraftFunctions.register(spark)
+    // a 1-bit at epoch 0 would head the newest-first bucket list and
+    // expire the real buckets on the next add. COALESCE(1) keeps the rows
+    // in one partition, in order, as one partition of a stream arrives;
+    // split across partitions, the canonical merge would sort it away
+    val count = spark.sql("""SELECT dgim_estimate(v, t) FROM (SELECT /*+ COALESCE(1) */ *
+      |  FROM VALUES ('1', 1700000000L), ('1', CAST(NULL AS BIGINT)), ('1', 1700000001L)
+      |  AS x(v, t))""".stripMargin)
+    assert(count.collect()(0).getLong(0) === 2L)
+    val sum = spark.sql("""SELECT dgim_sum_estimate(a, t) FROM (SELECT /*+ COALESCE(1) */ *
+      |  FROM VALUES (4L, 1700000000L), (4L, CAST(NULL AS BIGINT)), (4L, 1700000001L),
+      |  (CAST(NULL AS BIGINT), 1700000002L) AS x(a, t))""".stripMargin)
+    assert(sum.collect()(0).getLong(0) === 8L)
   }
 
   test("GraftExtensions satisfies the spark.sql.extensions deploy contract") {

@@ -706,4 +706,39 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       case _ => false
     }, df.queryExecution.executedPlan)
   }
+
+  test("tumbleDgim/hopDgim aggregate natively: DgimEstimate in an ObjectHashAggregate " +
+      "pair, no typed-udaf decode") {
+    import org.apache.spark.sql.execution.DeserializeToObjectExec
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.functions.DgimEstimate
+    import graft.sources.TrafficSource
+    import graft.streaming.TrafficJobs
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_dgim").toString
+    Seq("""{"value":"1","timestamp":"2024-01-01T00:00:01.000000"}""")
+      .toDF("raw").write.mode("overwrite").text(dir)
+    for (job <- Seq(TrafficJobs.tumbleDgim(_: DataFrame), TrafficJobs.hopDgim(_: DataFrame))) {
+      val parsed = TrafficSource.parse(
+        spark.readStream.format("text").load(dir).withColumnRenamed("value", "raw"))
+      val q = job(parsed).writeStream.format("memory")
+        .queryName("plan_dgim_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val nodes = plan.collect { case n => n }
+      val dgimAggs = nodes.collect {
+        case a: ObjectHashAggregateExec
+            if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[DgimEstimate]) => a
+      }
+      assert(dgimAggs.length >= 2, plan)
+      // the typed udaf decoded every row into a case class inside a
+      // ScalaAggregator; the native aggregate reads the row itself
+      assert(!nodes.exists(_.expressions.exists(_.exists(
+        _.getClass.getName == "org.apache.spark.sql.execution.aggregate.ScalaAggregator"))), plan)
+      assert(!nodes.exists(_.isInstanceOf[DeserializeToObjectExec]), plan)
+    }
+  }
 }
